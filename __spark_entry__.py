@@ -382,7 +382,8 @@ def _q_knn_starved(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 at table scale: k nearest suppliers for EVERY customer — both
     sides are tables, neither is broadcast (the candidate join is a
-    shuffled cell equi-join; only the 12*4^lvl ring map broadcasts).
+    shuffled cell equi-join; the left side's ring disc is a JVM Column
+    expression).
     Sparse-tail rows fall through the per-level verified-radius passes to
     the labeled exact fallback, so the result is total at every sf."""
     from spatialindex_spark.operators.knn import knn_join
@@ -431,7 +432,7 @@ def _q_cutout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image cutout windows (the cutout-service primitive): every
     (target, image) pair where the target lands inside the image's
     gnomonic footprint, with the clipped CUTOUT_SIZE window. Candidates
-    ride crossmatch's broadcast ring map keyed on the ingest-time hpx7
+    ride crossmatch's ring-disc equi-join keyed on the ingest-time hpx7
     column (image side all-JVM, metadata-only); the oracle replays the
     TAN projection + floor/clip arithmetic over an exact cross join."""
     from spatialindex_spark.operators.cutouts import cutout_windows

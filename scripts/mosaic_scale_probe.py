@@ -33,7 +33,9 @@ def run_size(spark, n_images: int, level: int, tile_px: int,
 
     from spatialindex_spark.operators.cutouts import (
         _tile_center_map, coadd_mosaic)
-    from spatialindex_spark.operators.joins import _ring1_map_df, hpx_cell_key
+    from spatialindex_spark.functions.healpix import (explode_cells,
+                                                      neighbors_col)
+    from spatialindex_spark.operators.joins import hpx_cell_key
     from spatialindex_spark.sources.images import synth_images_indexed
 
     imgs = (synth_images_indexed(spark, n_images, level=7,
@@ -50,12 +52,11 @@ def run_size(spark, n_images: int, level: int, tile_px: int,
     from spatialindex_spark.functions.healpix import max_pix_rad
 
     tile_rad = max_pix_rad(level)
-    ring = _ring1_map_df(spark, level)
     centers = _tile_center_map(spark, level)
-    cand = (imgs.withColumn("_pix", hpx_cell_key("hpx7", 7, level))
-            .join(F.broadcast(ring), "_pix")
-            .select("image_id", "ra", "dec", "w", "h",
-                    F.explode("_ring").alias("_tile"))
+    cand = (explode_cells(imgs.withColumn("_pix",
+                                          hpx_cell_key("hpx7", 7, level)),
+                          neighbors_col(level, "_pix"), "_tile",
+                          ["image_id", "ra", "dec", "w", "h"])
             .join(F.broadcast(centers), "_tile"))
     half_diag = (F.sqrt(F.col("w") * F.col("w") + F.col("h") * F.col("h"))
                  * F.lit(math.radians(scale_deg_px) / 2.0))

@@ -23,15 +23,13 @@ from pyspark.sql import functions as F
 import bench
 
 
-def stage_report(app_id: str, since_stage: int) -> list[dict]:
-    url = f"http://localhost:4040/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
+def stage_report(api: str, since_stage: int) -> list[dict]:
+    with urllib.request.urlopen(f"{api}/stages?status=complete") as r:
         stages = json.load(r)
     out = []
     for s in stages:
         if s["stageId"] < since_stage:
             continue
-        dur = (s.get("completionTime") and s.get("firstTaskLaunchedTime"))
         out.append({
             "id": s["stageId"],
             "name": s["name"].split("\n")[0][:70],
@@ -40,11 +38,19 @@ def stage_report(app_id: str, since_stage: int) -> list[dict]:
             "cpu_ms": (s.get("executorCpuTime") or 0) // 1_000_000,
             "in_mb": round((s.get("inputBytes") or 0) / 1e6, 1),
             "sh_r_mb": round((s.get("shuffleReadBytes") or 0) / 1e6, 1),
-            "py_ms": s.get("executorRunTime"),
             "submit": s.get("submissionTime"),
             "complete": s.get("completionTime"),
         })
     return sorted(out, key=lambda d: d["id"])
+
+
+def rest_api_base(spark) -> str:
+    """REST root of this session's UI, on whatever port it bound (4040 is
+    taken whenever another session runs, and the UI then moves up)."""
+    ui = spark.sparkContext.uiWebUrl
+    if not ui:
+        raise SystemExit("the Spark UI is disabled; set SPARK_GRAFT_UI=true")
+    return f"{ui}/api/v1/applications/{spark.sparkContext.applicationId}"
 
 
 def main():
@@ -62,7 +68,7 @@ def main():
         bench.build_image_table(spark)
     images = spark.read.parquet(path)
     images.count()
-    app_id = spark.sparkContext.applicationId
+    api = rest_api_base(spark)
 
     from spatialindex_spark.operators.detect import forced_photometry
     from spatialindex_spark.operators.cutouts import cutout_windows
@@ -124,7 +130,7 @@ def main():
     for p in range(passes):
         # find current max stage id
         try:
-            prior = stage_report(app_id, 0)
+            prior = stage_report(api, 0)
             since = (prior[-1]["id"] + 1) if prior else 0
         except Exception:
             since = 0
@@ -132,7 +138,7 @@ def main():
         fn(images)
         wall = time.perf_counter() - t0
         time.sleep(0.5)
-        rep = stage_report(app_id, since)
+        rep = stage_report(api, since)
         print(f"=== pass {p}: wall {wall:.2f}s, {len(rep)} stages")
         rep.sort(key=lambda d: -(d["exec_ms"] or 0))
         for s in rep[:8]:

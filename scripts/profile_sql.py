@@ -20,11 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 import bench
+from profile_query import rest_api_base
 
 
-def sql_execs(app_id: str, since: int):
-    url = (f"http://localhost:4040/api/v1/applications/{app_id}/sql"
-           f"?details=true&planDescription=false&length=200")
+def sql_execs(api: str, since: int):
+    url = f"{api}/sql?details=true&planDescription=false&length=200"
     with urllib.request.urlopen(url) as r:
         es = json.load(r)
     return [e for e in es if e["id"] >= since]
@@ -44,7 +44,7 @@ def main():
         bench.build_image_table(spark)
     images = spark.read.parquet(path)
     images.count()
-    app_id = spark.sparkContext.applicationId
+    api = rest_api_base(spark)
 
     from spatialindex_spark.operators.detect import forced_photometry
     from spatialindex_spark.operators.cutouts import cutout_windows
@@ -102,25 +102,20 @@ def main():
 
     fn(images)  # warm
     spark._jvm.System.gc()
-    prior = sql_execs(app_id, 0)
+    prior = sql_execs(api, 0)
     since = (max(e["id"] for e in prior) + 1) if prior else 0
     t0 = time.perf_counter()
     fn(images)
     wall = time.perf_counter() - t0
     time.sleep(1.0)
-    es = sql_execs(app_id, since)
+    es = sql_execs(api, since)
     print(f"wall {wall:.2f}s, {len(es)} SQL executions")
     for e in sorted(es, key=lambda x: x["id"]):
         print(f"--- exec {e['id']} dur={e['duration']}ms "
               f"{e.get('description', '')[:60]!r}")
-        nodes = e.get("nodes", [])
-        interesting = []
-        for n in nodes:
+        for n in e.get("nodes", []):
+            name = n["nodeName"]
             mm = {m["name"]: m["value"] for m in n.get("metrics", [])}
-            t = mm.get("time to build (total)") or mm.get(
-                "time to broadcast (total)") or mm.get("total time")
-            interesting.append((n["nodeName"], mm))
-        for name, mm in interesting:
             keep = {k: v for k, v in mm.items()
                     if any(s in k for s in (
                         "time", "rows", "bytes", "duration"))}

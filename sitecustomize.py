@@ -20,11 +20,26 @@ Gated on ``SPT_WORKER_IMPORTLIB_THROTTLE`` (seconds; set for executor
 daemons by ``plans.session.get_session`` via ``spark.executorEnv``), so a
 bare ``python`` run from the repo directory — the driver, pytest, any
 tooling — is untouched: without the env var this module does nothing.
+
+Python imports only the FIRST ``sitecustomize`` on ``sys.path``, so this
+file would hide a virtualenv's or the system's own. After the gated
+patches it therefore runs the next ``sitecustomize`` found on the path,
+if there is one. Every copy of this file records its directory on
+``sys``: a second copy (a benchmark checkout beside the repo on the path)
+skips the patches, which the first copy already applied, and no copy
+chains to a directory already visited, so two copies cannot run each
+other in a loop.
 """
 
 import os
+import sys
 
-_preload = os.environ.get("SPT_WORKER_PRELOAD")
+_HERE = os.path.dirname(os.path.realpath(__file__))
+_SEEN = sys.__dict__.setdefault("_spt_sitecustomize_dirs", [])
+_FIRST = not _SEEN
+_SEEN.append(_HERE)
+
+_preload = os.environ.get("SPT_WORKER_PRELOAD") if _FIRST else None
 if _preload:
     # Pre-import heavy modules in the DAEMON (this module loads at its
     # interpreter start; the gate env var only exists executor-side), so
@@ -41,7 +56,8 @@ if _preload:
         except Exception:  # missing optional module: worker still works
             pass
 
-_interval = os.environ.get("SPT_WORKER_IMPORTLIB_THROTTLE")
+_interval = (os.environ.get("SPT_WORKER_IMPORTLIB_THROTTLE") if _FIRST
+             else None)
 if _interval:
     try:
         import importlib
@@ -61,3 +77,25 @@ if _interval:
         importlib.invalidate_caches = _throttled_invalidate_caches
     except Exception:  # never break interpreter start
         pass
+
+
+def _run_shadowed_sitecustomize() -> None:
+    """Execute the sitecustomize this module shadows (the first one on
+    ``sys.path`` outside the directories of the copies that already ran),
+    as if it had loaded."""
+    import importlib.machinery
+    import importlib.util
+
+    rest = [d for d in sys.path
+            if os.path.realpath(d or os.curdir) not in _SEEN]
+    spec = importlib.machinery.PathFinder.find_spec("sitecustomize", rest)
+    if spec is None or spec.loader is None:
+        return
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+
+try:
+    _run_shadowed_sitecustomize()
+except Exception:  # never break interpreter start
+    pass

@@ -93,12 +93,8 @@ def s2_id(x, y, z, level: int) -> np.ndarray:
 S2_LEAF = 30
 
 #: Hilbert sub-cell traversal tables per orientation (swap=1, invert=2):
-#: position-along-curve <-> ij quadrant, and the orientation delta each
+#: ij quadrant -> position-along-curve, and the orientation delta each
 #: sub-cell applies to its children.
-_POS_TO_IJ = np.array([[0, 1, 3, 2],
-                       [0, 2, 3, 1],
-                       [3, 2, 0, 1],
-                       [3, 1, 0, 2]], dtype=np.int64)
 _IJ_TO_POS = np.array([[0, 1, 3, 2],
                        [0, 3, 1, 2],
                        [2, 3, 1, 0],
@@ -176,20 +172,6 @@ def s2_cell_id(x, y, z, level: int) -> np.ndarray:
     return snapped.view(np.int64) if snapped.ndim else np.int64(snapped)
 
 
-def s2_cell_level(ids) -> np.ndarray:
-    """Level from the trailing marker bit position."""
-    u = np.asarray(ids, dtype=np.int64).view(np.uint64)
-    lsb = u & (~u + np.uint64(1))
-    # marker at bit 2*(LEAF-level)
-    k = np.zeros_like(u, dtype=np.int64)
-    b = lsb.copy()
-    while np.any(b > np.uint64(1)):
-        step = b > np.uint64(1)
-        k[step] += 1
-        b[step] >>= np.uint64(1)
-    return S2_LEAF - (k // 2)
-
-
 def s2_cell_parent(ids, parent_level: int) -> np.ndarray:
     """Ancestor at a coarser level (S2CellId::parent): clear sub-level bits,
     set the coarser marker."""
@@ -208,45 +190,6 @@ def s2_cell_range(ids) -> tuple[np.ndarray, np.ndarray]:
             (u + lsb - np.uint64(1)).view(np.int64))
 
 
-def s2_cell_center(ids) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Unit-vector center of each cell: inverse Hilbert walk to (face,i,j),
-    st = center of the level-resolution cell, uv quadratic inverse, face
-    chart to xyz, normalize."""
-    u64 = np.asarray(ids, dtype=np.int64).view(np.uint64)
-    face = (u64 >> np.uint64(2 * S2_LEAF + 1)).astype(np.int64)
-    pos = (u64 >> np.uint64(1)) & ((np.uint64(1) << np.uint64(2 * S2_LEAF))
-                                   - np.uint64(1))
-    level = s2_cell_level(ids)
-    i = np.zeros_like(face)
-    j = np.zeros_like(face)
-    orient = (face & 1).astype(np.int64)
-    for k in range(S2_LEAF - 1, -1, -1):
-        p = ((pos >> np.uint64(2 * k)) & np.uint64(3)).astype(np.int64)
-        ij = _POS_TO_IJ[orient, p]
-        i = (i << 1) | (ij >> 1)
-        j = (j << 1) | (ij & 1)
-        orient = orient ^ _POS_TO_ORIENT[p]
-    # center of the level-cell in leaf st units: leaf cells center at
-    # i + 0.5; coarser cells center at i0 + 2^(drop-1) EXACTLY (adding the
-    # extra half-leaf would bias the center by 2^-31 of the face)
-    drop = S2_LEAF - level
-    i0 = (i >> drop) << drop
-    j0 = (j >> drop) << drop
-    half = np.where(drop > 0, (np.int64(1) << np.maximum(drop - 1, 0))
-                    .astype(np.float64), 0.5)
-    n = float(1 << S2_LEAF)
-    s = (i0 + half) / n
-    t = (j0 + half) / n
-    x, y, z = _face_uv_to_xyz_s2(face, _st_to_uv(s), _st_to_uv(t))
-    norm = np.sqrt(x * x + y * y + z * z)
-    return x / norm, y / norm, z / norm
-
-
-def s2_parent(ids: np.ndarray, level: int, parent_level: int) -> np.ndarray:
-    """Ancestor cell at a coarser level (2 bits per level)."""
-    return np.asarray(ids, dtype=np.int64) >> (2 * (level - parent_level))
-
-
 def h3_id(ra, dec, res: int) -> np.ndarray:
     """H3-style id: (res << 56) | (base_cell << 48) | path, where base_cell is
     the HEALPix face (12 rhombic base cells) and path is the 2-bit-per-res
@@ -257,23 +200,6 @@ def h3_id(ra, dec, res: int) -> np.ndarray:
     base = pix >> (2 * res)
     path = pix & ((np.int64(1) << (2 * res)) - 1)
     return (np.int64(res) << 56) | (base << 48) | path
-
-
-def h3_to_components(ids) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(res, base_cell, path) from an h3-style id."""
-    ids = np.asarray(ids, dtype=np.int64)
-    res = ids >> 56
-    base = (ids >> 48) & 0xFF
-    path = ids & ((np.int64(1) << 48) - 1)
-    return res, base, path
-
-
-def h3_parent(ids, parent_res: int) -> np.ndarray:
-    """Ancestor id at a coarser resolution (H3 h3ToParent analogue)."""
-    ids = np.asarray(ids, dtype=np.int64)
-    res, base, path = h3_to_components(ids)
-    shift = 2 * (res - parent_res)
-    return (np.int64(parent_res) << 56) | (base << 48) | (path >> shift)
 
 
 # ---------------------------------------------------------------------------

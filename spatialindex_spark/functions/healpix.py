@@ -302,6 +302,154 @@ def neighbors(order: int, pix: np.ndarray) -> np.ndarray:
     return out
 
 
+def _ring1_sql(order: int, p: str, in_face: bool = False) -> str:
+    """SQL ``array(...)`` of NESTED pixel ``p`` (an SQL expression) and its
+    8 ring-1 neighbours — ``neighbors`` rewritten on the interleaved ids.
+
+    The face-local id keeps ix on the even bits and iy on the odd bits, so
+    each coordinate steps by +-1 in place with the dilated-integer carry
+    trick (fill the other coordinate's bits with ones, add, mask), never
+    leaving the nested encoding. A step that crosses the face edge wraps
+    the same way (nside is a power of two); its new face and mirror/swap
+    come from _NB_FACEARRAY/_NB_SWAPARRAY, folded per ``order`` into one
+    literal ``step`` table indexed by nbnum * 16 + face:
+
+        (new face << 2*order) | (mirror mask) | (swap << 62)
+
+    A swap exchanges the even and odd bits, and mirroring a coordinate
+    (x -> nside-1-x) is an xor with its bit mask; swapping first and then
+    xoring with the swapped mask equals the reference order (mirror, then
+    swap). The center row of both tables is the identity, so in-face steps
+    use the same formula. Faces 12-15 pad each row so that any id, even an
+    invalid one, indexes inside the table. The table is one string literal
+    that constant folding turns into a single array literal: spelled out
+    as ``array(...)`` it would be hundreds of nodes per use, and planning
+    time grows with the expression tree.
+
+    ``in_face=True`` gives the neighbours of a pixel off its face's edges:
+    plain in-face steps, no table."""
+    xm = 0x5555555555555555 & ((1 << (2 * order)) - 1)  # ix bits
+    ym = xm << 1                                          # iy bits
+    step = []
+    for nbnum in range(9):
+        for face in range(16):
+            if face >= 12:
+                step.append(0)
+                continue
+            bits = int(_NB_SWAPARRAY[nbnum, face >> 2])
+            mx, my = (ym, xm) if bits & 4 else (xm, ym)  # swapped masks
+            step.append((int(_NB_FACEARRAY[nbnum, face]) << (2 * order))
+                        | (mx if bits & 1 else 0) | (my if bits & 2 else 0)
+                        | ((bits >> 2) << 62))
+    table = ("CAST(split('" + ",".join(map(str, step)) + "', ',')"
+             " AS ARRAY<BIGINT>)")
+    face = f"CAST(shiftright({p}, {2 * order}) & 15 AS INT)"
+    x, y = f"({p} & {xm})", f"({p} & {ym})"
+    step_x = {-1: f"(({x} - 1) & {xm})", 0: x,
+              1: f"((({x} | {ym}) + 1) & {xm})"}
+    step_y = {-1: f"(({y} - 1) & {ym})", 0: y,
+              1: f"((({y} | {xm}) + 1) & {ym})"}
+    # 1-based nbnum * 16 + face = 1 + (4 + ox + 3 * oy) * 16 + face, from
+    # the per-axis edge overflow
+    over_x = {-1: f"IF({x} = 0, -16, 0)", 0: "0",
+              1: f"IF({x} = {xm}, 16, 0)"}
+    over_y = {-1: f"IF({y} = 0, -48, 0)", 0: "0",
+              1: f"IF({y} = {ym}, 48, 0)"}
+    cells = [p]
+    for sx in (-1, 0, 1):
+        for sy in (-1, 0, 1):
+            if sx == 0 and sy == 0:
+                continue
+            if in_face:
+                cells.append(f"(({p} & {-1 << (2 * order)})"
+                             f" | {step_x[sx]} | {step_y[sy]})")
+                continue
+            t = (f"element_at({table}, "
+                 f"65 + {over_x[sx]} + {over_y[sy]} + {face})")
+            swap = f"shiftright({t}, 62)"  # 1 swaps the coordinates
+            cells.append(f"(((shiftleft({step_x[sx]}, {swap})"
+                         f" | shiftright({step_y[sy]}, {swap})) ^ {t})"
+                         f" & {(16 << (2 * order)) - 1})")
+    return "array(" + ", ".join(cells) + ")"
+
+
+def _disc_sql(order: int, p: str, rings: int, inner: int = 0) -> str:
+    """SQL array of the cells of rings inner+1..rings around pixel ``p``
+    (an SQL expression; inner=0: the whole disc, center included)."""
+    npix = 12 << (2 * order)
+    disc = f"array_distinct({_ring1_sql(order, p)})"
+    if rings == 1:
+        return disc
+    if (2 * rings + 1) ** 2 >= npix:
+        disc = f"sequence(0L, {npix - 1}L)"
+        return (disc if inner == 0 else
+                f"array_except({disc}, {_disc_sql(order, p, inner)})")
+    # the lambda runs interpreted (higher-order functions have no
+    # codegen), which evaluates only the taken IF branch: a cell off its
+    # face's edges takes the in-face form, ~10x fewer nodes
+    xm = 0x5555555555555555 & ((1 << (2 * order)) - 1)
+    off_edge = (f"(_q & {xm}) NOT IN (0, {xm})"
+                f" AND (_q & {xm << 1}) NOT IN (0, {xm << 1})")
+    ring1 = (f"IF({off_edge}, {_ring1_sql(order, '_q', in_face=True)}, "
+             f"{_ring1_sql(order, '_q')})")
+    # _acc: the ring-1 disc, then ring 2, 3, ... — newest last
+    grow = (f"array_except(flatten(transform(element_at(_acc, -1), "
+            f"_q -> {ring1})), flatten(_acc))")
+    keep = "_acc" if inner == 0 else f"slice(_acc, {inner + 1}, {rings - inner})"
+    return (f"aggregate(sequence(2, {rings}), array({disc}), "
+            f"(_acc, _i) -> concat(_acc, array({grow})), "
+            f"_acc -> flatten({keep}))")
+
+
+def neighbors_col(order: int, pix: str, rings: int = 1, inner: int = 0):
+    """Spark Column: the NESTED pixel in column ``pix`` (name of a long
+    column) plus every cell of its ring-``rings`` disc, deduplicated, as
+    ``array<long>`` — the JVM form of ``neighbors``, so ring expansion
+    runs in whole-stage codegen with no lookup table and no Python. A
+    null or out-of-range pixel (e.g. keyed from NaN coordinates) yields
+    an empty array, which explodes to nothing. ``inner`` > 0 leaves out
+    the ring-``inner`` disc: the shell of rings inner+1..rings.
+
+    Ring r > 1 grows the disc one ring at a time, expanding only the last
+    ring added (every neighbour of an inner cell is already in the disc);
+    once the disc could cover the sphere ((2r+1)^2 >= npix) it is every
+    pixel. Built as one SQL expression: a single parse instead of
+    hundreds of Column calls. Explode it with ``explode_cells``, not
+    ``F.explode``, to keep its generated code small enough to be
+    JIT-compiled."""
+    from pyspark.sql import functions as F
+
+    if not 0 <= inner < rings:
+        raise ValueError(f"need 0 <= inner < rings, got {inner}, {rings}")
+    npix = 12 << (2 * order)
+    p = f"coalesce(CAST(`{pix}` AS BIGINT), -1L)"
+    # the disc of an invalid id is garbage and sliced away afterwards:
+    # wrapping the disc itself in a CASE puts it in a conditional branch,
+    # which codegen does not share subexpressions into
+    keep = f"IF({p} >= 0 AND {p} < {npix}, {min(npix, 2**31 - 1)}, 0)"
+    return F.expr(f"slice({_disc_sql(order, p, rings, inner)}, 1, {keep})")
+
+
+def explode_cells(df, cells, out: str, cols=None):
+    """``df``'s ``cols`` (default: all) repeated once per element of the
+    array Column ``cells`` (e.g. ``neighbors_col``), the element in column
+    ``out``; rows whose array is empty or null are dropped.
+
+    The array is projected as a column first and exploded with
+    ``explode_outer``. Exploding the expression directly gets no
+    subexpression elimination, so the ring expression's code lands in one
+    generated method too large for the JVM's JIT (measured ~20x slower per
+    row); a plain ``explode`` of the projected column makes the optimizer
+    infer a ``size(...) > 0`` filter and push it below the projection,
+    which computes the array twice. ``explode_outer`` infers no filter."""
+    from pyspark.sql import functions as F
+
+    cols = list(df.columns if cols is None else cols)
+    return (df.select(*cols, cells.alias("_spt_cells"))
+            .select(*cols, F.explode_outer("_spt_cells").alias(out))
+            .filter(F.col(out).isNotNull()))
+
+
 def pix2vec(order: int, pix):
     """Pixel center as unit vector(s); uses sqrt((1-z)(1+z)) for sintheta
     (sptQueryLib.c:1436 numerical form)."""

@@ -55,7 +55,6 @@ def get_lib():
         pl = ctypes.POINTER(ctypes.c_int64)
         lib.htm_id_batch.argtypes = [pd, pd, pd, i64, ctypes.c_int, pl]
         lib.hpx_id_batch.argtypes = [pd, pd, i64, ctypes.c_int, pl]
-        lib.radec_to_xyz_batch.argtypes = [pd, pd, i64, pd, pd, pd]
         pu8 = ctypes.POINTER(ctypes.c_uint8)
         pu64 = ctypes.POINTER(ctypes.c_uint64)
         lib.minhash_sig_batch.argtypes = [pu8, pl, i64, ctypes.c_int,
@@ -160,18 +159,3 @@ def simhash_native(texts, k: int):
     return out, valid.astype(bool)
 
 
-def radec_to_xyz_native(ra, dec):
-    import numpy as np
-
-    lib = get_lib()
-    if lib is None:
-        return None
-    ra = np.ascontiguousarray(ra, dtype=np.float64)
-    dec = np.ascontiguousarray(dec, dtype=np.float64)
-    n = len(ra)
-    xs = np.empty(n); ys = np.empty(n); zs = np.empty(n)
-    pd = ctypes.POINTER(ctypes.c_double)
-    lib.radec_to_xyz_batch(ra.ctypes.data_as(pd), dec.ctypes.data_as(pd), n,
-                           xs.ctypes.data_as(pd), ys.ctypes.data_as(pd),
-                           zs.ctypes.data_as(pd))
-    return xs, ys, zs

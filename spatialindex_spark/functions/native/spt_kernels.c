@@ -172,23 +172,6 @@ void hpx_id_batch(const double *ras, const double *decs,
     }
 }
 
-/* unit-sphere conversion with the indexing path's dtr = atan(1)/45 */
-void radec_to_xyz_batch(const double *ras, const double *decs, int64_t n,
-                        double *xs, double *ys, double *zs)
-{
-    const double dtr = atan(1.0) / 45.0;
-    for (int64_t i = 0; i < n; ++i) {
-        double cd = cos(decs[i] * dtr);
-        double x = cos(ras[i] * dtr) * cd;
-        double y = sin(ras[i] * dtr) * cd;
-        double z = sin(decs[i] * dtr);
-        double nrm = sqrt(x * x + y * y + z * z);
-        xs[i] = x / nrm;
-        ys[i] = y / nrm;
-        zs[i] = z / nrm;
-    }
-}
-
 /* ---- MinHash signature batch kernel (operators/dedup.py hot stage) ----
  *
  * Bit-identical to the numpy kernel _batch_signatures:

@@ -142,15 +142,6 @@ def with_xyz(df, ra_col: str = "ra", dec_col: str = "dec"):
     return df.withColumns({"x": x / norm, "y": y / norm, "z": z / norm})
 
 
-def with_xyz_exact(df, ra_col: str = "ra", dec_col: str = "dec"):
-    """Bit-exact x,y,z via the numpy pandas UDF (dtr = atan(1)/45 exactly as
-    sptIndx.c:84). Use this when fixture-identical floats matter."""
-    s = xyz_udf(F.col(ra_col), F.col(dec_col))
-    return (df.withColumn("_v3", s)
-              .withColumns({"x": F.col("_v3.x"), "y": F.col("_v3.y"), "z": F.col("_v3.z")})
-              .drop("_v3"))
-
-
 def spt_index_udf(level: int, systems: tuple = ("htm", "hpx")):
     """The sptIndx augmentation as ONE struct-returning pandas UDF:
     (ra, dec) -> (x, y, z, htm<L>, hpx<L>[, s2<L>, h3<L>]).

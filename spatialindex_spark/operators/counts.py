@@ -299,11 +299,12 @@ def map_smooth(map_df: DataFrame, level: int, pix_col: str = "pix",
     don't dilute; callers wanting dense semantics densify first). The
     standard first smoothing pass over depth/density/exposure maps.
 
-    Scale shape: the complete (center -> disc cells) map at ``level`` is
-    the SAME cached broadcast crossmatch rides (joins._ring1_map_df,
-    level <= 8 per its budget); the map table joins it JVM-side on the
-    neighbor key and ONE groupBy on the center key aggregates — the map
-    never shuffles by more than its own (bounded at npix(level)) size.
+    Scale shape: every present pixel explodes into its own ring-1 disc
+    (healpix.neighbors_col, JVM Column math) — adjacency is symmetric, so
+    "q is in c's disc" is "c is in q's disc" — and ONE groupBy on the
+    disc cell aggregates; a semi-join keeps the present centers. No
+    lookup table, no level cap: the map never shuffles by more than 9x
+    its own size.
 
     Determinism contract: values are quantized to ``quant`` units before
     summing (int64-exact, aggregation-order-independent); the emitted
@@ -316,17 +317,14 @@ def map_smooth(map_df: DataFrame, level: int, pix_col: str = "pix",
 
     Returns (pix, n_disc, smooth) with n_disc the present-cell count.
     """
-    from .joins import _ring1_map_df
+    from ..functions.healpix import explode_cells, neighbors_col
 
-    spark = map_df.sparkSession
-    ring = _ring1_map_df(spark, level)          # (_pix, _ring array)
-    pairs = ring.select(F.col("_pix").alias("_center"),
-                        F.explode("_ring").alias("_nbr"))
     vq = F.round(F.col(val_col) * quant).cast("long")
     vals = map_df.select(F.col(pix_col).cast("long").alias("_mp"),
                          vq.alias("_vq"))
     centers = vals.select(F.col("_mp").alias("_c")).distinct()
-    gathered = (vals.join(F.broadcast(pairs), vals["_mp"] == pairs["_nbr"])
+    gathered = (explode_cells(vals, neighbors_col(level, "_mp"), "_center",
+                              ["_vq"])
                 .groupBy(F.col("_center"))
                 .agg(F.sum("_vq").alias("_s"),
                      F.count(F.lit(1)).alias("n_disc")))

@@ -34,8 +34,8 @@ existing ``crossmatch`` ring-1 machinery (J3).
 
 Scale shape (100 TB)
 --------------------
-- ``cutout_windows``: candidates ride crossmatch's broadcast ring-map
-  join keyed by the ingest-time cell column — the image side is a
+- ``cutout_windows``: candidates ride crossmatch's ring-disc equi-join
+  keyed by the ingest-time cell column — the image side is a
   METADATA-ONLY scan (the ``bytes`` column never enters ReadSchema,
   plan-asserted in tests) and stays entirely JVM-side; the window math
   is pure Column trig on the matched pairs.  Nothing about the image
@@ -63,8 +63,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import max_pix_rad, pix2vec
-from .joins import _ring1_map_df, crossmatch, hpx_cell_key
+from ..functions.healpix import (explode_cells, max_pix_rad, neighbors_col,
+                                 pix2vec)
+from .joins import crossmatch, hpx_cell_key
 
 _log = logging.getLogger(__name__)
 
@@ -132,7 +133,7 @@ def cutout_windows(targets: DataFrame, images: DataFrame,
     ``targets`` needs (target_id, ra, dec); ``images`` needs
     (image_id, ra, dec, w, h).  Pass the ingest-time nested-HPX cell
     column via ``cell_col``/``cell_level`` to keep the image side's
-    candidate keying entirely JVM (crossmatch's broadcast ring map).
+    candidate keying entirely JVM (crossmatch's neighbors_col path).
 
     ``max_dim_px`` bounds max(w, h) across the table; when omitted it
     is read with one scalar aggregate (a single-row driver read, the
@@ -153,7 +154,7 @@ def cutout_windows(targets: DataFrame, images: DataFrame,
     isel = images.select(image_id, "ra", "dec", "w", "h",
                          *([cell_col] if cell_col else []))
     if cell_col is not None and cell_level is not None:
-        # crossmatch's JVM ring-map path keys BOTH sides on the same
+        # crossmatch's JVM cell-column path keys BOTH sides on the same
         # cell column name; targets are small, so computing their cell
         # here costs one Arrow batch over the tiny side only
         if cell_col not in tsel.columns:
@@ -597,8 +598,8 @@ def _ring_reach_lb(lvl: int, k: int) -> float:
 
 def _tile_center_map(spark, level: int) -> DataFrame:
     """Complete (tile pix -> center ra/dec) map at ``level`` — the
-    broadcast side of the mosaic's candidate pruning.  Bounded like
-    crossmatch's ring map (12 * 4^level rows, level capped by caller)."""
+    broadcast side of the mosaic's candidate pruning.  Bounded at
+    12 * 4^level rows (level capped by the caller)."""
     npix = 12 << (2 * level)
     pix = np.arange(npix, dtype=np.int64)
     x, y, z = pix2vec(level, pix)
@@ -661,8 +662,8 @@ def coadd_mosaic(images: DataFrame, level: int, tile_px: int,
     black from empty sky.
     """
     if level > 8:
-        raise ValueError("mosaic tile level capped at 8 (ring-map and "
-                         "tile-center broadcasts are complete maps)")
+        raise ValueError("mosaic tile level capped at 8 (the tile-center "
+                         "broadcast is a complete map)")
     spark = images.sparkSession
     tile_rad = max_pix_rad(level)
     tile_scale = 2.0 * tile_rad / tile_px          # rad / tile pixel
@@ -723,13 +724,11 @@ def coadd_mosaic(images: DataFrame, level: int, tile_px: int,
                 "the mosaic candidate ring was sized for smaller images")
     own = F.when(dguard.isNull(), own)
 
-    ring = _ring1_map_df(spark, level, rings=n_rings)
     centers = _tile_center_map(spark, level)
 
-    cand = (images.withColumn("_pix", own)
-            .join(F.broadcast(ring), "_pix")
-            .select(*[F.col(c) for c in images.columns],
-                    F.explode("_ring").alias("_tile"))
+    cand = (explode_cells(images.withColumn("_pix", own),
+                          neighbors_col(level, "_pix", n_rings), "_tile",
+                          images.columns)
             .join(F.broadcast(centers), "_tile"))
 
     # prune 1 (disc): keep (image, tile) only if the image's

@@ -117,8 +117,8 @@ def forced_photometry(targets: DataFrame, images: DataFrame,
     Scale shape (100 TB): the (target, image) pairing is
     :func:`~spatialindex_spark.operators.cutouts.cutout_windows` — the
     image side is metadata-only (bytes never enter the window plan) and
-    rides crossmatch's broadcast ring map when an ingest-time cell
-    column is supplied. Pixels are read back ONLY for matched images
+    stays JVM-only (crossmatch's neighbors_col ring expansion) when an
+    ingest-time cell column is supplied. Pixels are read back ONLY for matched images
     (distinct-id IN-set pushed into the parquet scan, same pattern as
     cutout_pixels) and each flux is produced inside one Arrow batch —
     the shuffle carries window coordinates and 8-byte sums, never

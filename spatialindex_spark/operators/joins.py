@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.constraints import SpatialIndex
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import max_pix_rad
 
 
 # ---------------------------------------------------------------------------
@@ -428,89 +427,6 @@ def _hpx_neighbors(order: int, pix: np.ndarray) -> np.ndarray:
     return np.concatenate([pix[:, None], nb], axis=1)
 
 
-#: deepest match level whose full (pix -> ring-1 cells) map is broadcast
-#: (12*4^8 = 786k rows, ~60 MB) so crossmatch's left-side ring expansion
-#: runs JVM-only; deeper levels fall back to the Arrow pandas UDF
-JVM_RING_MAX_LEVEL = 8
-
-
-_RING1_MAP_CACHE: dict = {}
-
-
-def _ring1_map_df(spark, lvl: int, rings: int = 1) -> DataFrame:
-    """Complete (pix, sorted deduped ring-``rings`` disc cell list) map at
-    ``lvl`` — the broadcast side of crossmatch's JVM ring expansion.
-    Cached per (session, lvl, rings): the driver-side numpy build +
-    local-data plan conversion costs ~1 s at level 7 and a long-running
-    job pays it once, but a bench loop calling crossmatch repeatedly
-    would otherwise pay it per call (measured +1.2 s/call).
-
-    rings > 1 is the very-large-radius path (radius beyond the level's
-    safe ring-1 bound): callers coarsen the level first, so the disc
-    enumeration stays tiny (12 pixels at level 0); a guard bounds the
-    map size rather than ever building a silent monster."""
-    key = (spark, lvl, rings)  # session object itself: no id()-reuse alias
-    cached = _RING1_MAP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    npix = 12 << (2 * lvl)
-    if rings > 1:
-        if npix * (2 * rings + 1) ** 2 > 4_000_000:
-            raise ValueError(
-                f"ring map at level {lvl} with {rings} rings would exceed "
-                "the broadcast budget; coarsen the level")
-        from .knn import _disc_cells
-
-        pdf = pd.DataFrame({
-            "_pix": np.arange(npix, dtype=np.int64),
-            "_ring": [_disc_cells(lvl, p, rings).tolist()
-                      for p in range(npix)]})
-        df = spark.createDataFrame(pdf, "_pix long, _ring array<long>")
-        return _persist_ring_map(key, df)
-    pix = np.arange(npix, dtype=np.int64)
-    nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-    keep = np.ones(nb.shape, dtype=bool)
-    keep[:, 1:] = nb[:, 1:] != nb[:, :-1]
-    counts = keep.sum(axis=1)
-    flat = nb[keep]
-    rings = np.split(flat, np.cumsum(counts)[:-1])
-    pdf = pd.DataFrame({"_pix": pix,
-                        "_ring": [r.tolist() for r in rings]})
-    df = spark.createDataFrame(pdf, "_pix long, _ring array<long>")
-    return _persist_ring_map(key, df)
-
-
-def _persist_ring_map(key, df: DataFrame) -> DataFrame:
-    """Session-lifetime persist of a ring map (pure geometry, data-
-    independent — a function of (level, rings) only, the engine's dr[o]
-    table analogue). Without it every query execution re-materializes
-    the 12*4^lvl-row LocalRelation inside its broadcast build — profiled
-    at level 7: 1.1 s 'time to collect' + 0.2 s build PER QUERY (guide
-    §5 caching: reused AND expensive to recompute). Persisted it reads
-    from the block store; interleaved A/B on the bench crossmatch:
-    1.99 s -> 1.47 s. Bounded: levels are capped at JVM_RING_MAX_LEVEL
-    (786k rows, ~60 MB) and the cache is per (session, lvl, rings)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _RING1_MAP_CACHE[key] = df
-    return df
-
-
-def check_hpx_cell_col(data: DataFrame, cell_col: str, cell_level: int) -> None:
-    """Sampled misuse guard (legacy): one-row check that the column holds a
-    valid nested-HPX id. Kept for ad-hoc validation; the hot paths now use
-    hpx_cell_key(), whose in-plan assert_true validates EVERY row with zero
-    extra jobs."""
-    row = data.select(cell_col).first()
-    if row is not None and row[0] is not None:
-        v = int(row[0])
-        if not 0 <= v < (12 << (2 * cell_level)):
-            raise ValueError(
-                f"{cell_col}={v} is not a nested-HPX cell id at level "
-                f"{cell_level} (did you pass an HTM column?)")
-
-
 def hpx_cell_key(cell_col: str, cell_level: int, match_level: int):
     """Coarsened match key from an ingest-time nested-HPX cell column, with
     an in-plan misuse guard. Catches the easy mistake of passing the
@@ -547,20 +463,18 @@ def pick_match_level(radius_deg: float, max_level: int = 20) -> int:
 
 
 def ring_cover_level(radius_deg: float, cell_level: int) -> tuple[int, int]:
-    """(match level, ring count) for the broadcast disc-map candidate
-    path — ONE definition shared by the streaming operators (three
-    diverging copies of coverage-critical level math invite silent
-    under-matching).  The coarsest of pick_match_level / cell_level /
-    JVM_RING_MAX_LEVEL; radii beyond even the order-0 ring-1 bound
-    (~29 deg) take a multi-ring disc at level 0 (12 pixels, trivially
-    broadcastable — the chain-coverage argument of crossmatch's
-    rings>1 path).  The lvl=0 reset is only reachable when
-    pick_match_level already chose 0 (the min() caps can only COARSEN,
-    which enlarges safe_ring1_rad) — kept as an explicit invariant
-    rather than an assumption."""
+    """(match level, ring count) for the ring-disc candidate path — ONE
+    definition shared by the streaming operators (three diverging copies
+    of coverage-critical level math invite silent under-matching).  The
+    coarser of pick_match_level / cell_level; radii beyond even the
+    order-0 ring-1 bound (~29 deg) take a multi-ring disc at level 0
+    (the chain-coverage argument of crossmatch's rings>1 path).  The
+    lvl=0 reset is only reachable when pick_match_level already chose 0
+    (the cell_level cap can only COARSEN, which enlarges safe_ring1_rad)
+    — kept as an explicit invariant rather than an assumption."""
     from ..functions.healpix import safe_ring1_rad
 
-    lvl = min(pick_match_level(radius_deg), cell_level, JVM_RING_MAX_LEVEL)
+    lvl = min(pick_match_level(radius_deg), cell_level)
     rings = max(1, math.ceil(radius_deg * RAD_PER_DEG / safe_ring1_rad(lvl)))
     if rings > 1:
         lvl = 0
@@ -596,7 +510,8 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
         level = min(level, cell_level)
 
     from pyspark.sql.pandas.functions import pandas_udf
-    from ..functions.healpix import hpx_id as _hpx, safe_ring1_rad
+    from ..functions.healpix import (explode_cells, hpx_id as _hpx,
+                                     neighbors_col, safe_ring1_rad)
 
     lvl = level
     # rings needed so ring-r adjacency provably covers radius_deg (chain
@@ -605,32 +520,9 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
     # the order-0 safe radius (~28 deg) or a user-forced coarse level.
     rings = max(1, math.ceil(radius_deg * RAD_PER_DEG / safe_ring1_rad(lvl)))
 
-    def _nb_lists(pix: np.ndarray) -> pd.Series:
-        if rings == 1:
-            nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-            # row-wise dedup without a per-row unique() call: mask repeats
-            # in the sorted rows, split kept values by per-row counts
-            keep = np.ones(nb.shape, dtype=bool)
-            keep[:, 1:] = nb[:, 1:] != nb[:, :-1]
-            counts = keep.sum(axis=1)
-            flat = nb[keep]
-            return pd.Series(np.split(flat, np.cumsum(counts)[:-1]))
-        rows = [np.atleast_1d(p) for p in pix]
-        for _ in range(rings):
-            rows = [np.unique(_hpx_neighbors(lvl, row)) for row in rows]
-        return pd.Series(rows)
-
     @pandas_udf("long")
     def cell_of(ra: pd.Series, dec: pd.Series) -> pd.Series:
         return pd.Series(_hpx(lvl, ra.values, dec.values))
-
-    @pandas_udf("array<long>")
-    def cells_with_neighbors(ra: pd.Series, dec: pd.Series) -> pd.Series:
-        return _nb_lists(_hpx(lvl, ra.values, dec.values))
-
-    @pandas_udf("array<long>")
-    def cells_with_neighbors_from_pix(pix: pd.Series) -> pd.Series:
-        return _nb_lists(pix.values.astype(np.int64))
 
     lr, ld = left_cols
     rr, rd = right_cols
@@ -638,31 +530,18 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
     rsel = [F.col(c).alias(c + suffixes[1]) for c in right.columns]
 
     if use_cell:
-        # in-plan every-row range guard on the big (right) side — no
-        # sampling job
-        rkey_col = hpx_cell_key(cell_col, cell_level, lvl)
-        if rings == 1 and lvl <= JVM_RING_MAX_LEVEL:
-            # coarse match level: the complete (pix -> ring-1 cells) map is
-            # small (12*4^lvl rows, <= ~786k at level 8) — broadcast it and
-            # explode JVM-side, so the WHOLE crossmatch plan is free of
-            # ArrowEvalPython when an ingest-time cell column is supplied
-            # (plan-asserted). Both sides share the guarded key expression.
-            ring_map = _ring1_map_df(left.sparkSession, lvl)
-            lkey = (left.select(*lsel,
-                                hpx_cell_key(cell_col, cell_level, lvl)
-                                .alias("_pix"))
-                    .join(F.broadcast(ring_map), "_pix", "inner")
-                    .select(*[c + suffixes[0] for c in left.columns],
-                            F.explode("_ring").alias("_mc")))
-        else:
-            lpix = F.shiftright(F.col(cell_col), 2 * (cell_level - lvl))
-            lcells = cells_with_neighbors_from_pix(lpix)
-            lkey = left.select(*lsel, F.explode(lcells).alias("_mc"))
+        # in-plan every-row range guard on both sides — no sampling job;
+        # the whole plan is JVM-only (plan-asserted)
+        lkey_col = rkey_col = hpx_cell_key(cell_col, cell_level, lvl)
     else:
+        lkey_col = cell_of(F.col(lr), F.col(ld))
         rkey_col = cell_of(F.col(rr), F.col(rd))
-        lcells = cells_with_neighbors(F.col(lr), F.col(ld))
-        lkey = left.select(*lsel, F.explode(lcells).alias("_mc"))
-
+    # the left side explodes into its ring disc (neighbors_col: JVM
+    # Column math); projecting the key first keeps the guard/UDF from
+    # being re-evaluated per neighbor
+    lkey = explode_cells(left.select(*lsel, lkey_col.alias("_pix")),
+                         neighbors_col(lvl, "_pix", rings), "_mc",
+                         [c + suffixes[0] for c in left.columns])
     rkey = right.select(*rsel, rkey_col.alias("_mc"))
 
     pairs = lkey.join(rkey, "_mc").drop("_mc")

@@ -38,66 +38,18 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import hpx_id, safe_ring1_rad
-from .joins import _hpx_neighbors, hpx_cell_key
+from ..functions.healpix import explode_cells, neighbors_col, safe_ring1_rad
+from ..functions.udfs import hpx_udf
+from .joins import hpx_cell_key
 
 # last knn_join auto decisions, for probe/test introspection only
 _DECISIONS: dict = {}
 
-
-def _disc_cells(lvl: int, pix: int, r: int) -> np.ndarray:
-    """Closure of ring-r adjacency around one pixel (sorted unique ids).
-    Caps at the full sphere once the disc would cover most of it."""
-    total = 12 << (2 * lvl)
-    if r > 0 and (2 * r + 1) ** 2 >= total:
-        return np.arange(total, dtype=np.int64)
-    cells = np.atleast_1d(np.int64(pix))
-    for _ in range(r):
-        cells = np.unique(_hpx_neighbors(lvl, cells))
-        cells = cells[cells >= 0]
-    return cells
-
-
-def _shell_cells_udf(lvl: int, r_lo: int, r_hi: int):
-    """Cells in disc(r_hi) \\ disc(r_lo) per query row (r_lo=0 => the whole
-    disc including the center cell). Shells are disjoint across widening
-    rounds, so accumulated candidate pairs never duplicate.
-
-    The (0, 1) case — the only shape knn_join's fine rungs and knn()'s
-    first probe use — is fully vectorized (guide §4.2): the old per-row
-    ``_disc_cells`` loop ran np.unique once per row, and on a
-    cell-clustered table a dense spot concentrates in ONE task, which
-    then gates every broadcast/job that evaluates the UDF (profiled at
-    sf1: 4.7-5.7 s straggler tasks, several per sweep). The batch path
-    computes all rows' 9-cell discs in one ``neighbors`` call and
-    dedups with a sort + shift-compare, identical output set per row
-    (order differs; the consumer explodes, so order is irrelevant)."""
-
-    @pandas_udf("array<long>")
-    def _udf(ra: pd.Series, dec: pd.Series) -> pd.Series:
-        pix = hpx_id(lvl, ra.values, dec.values)
-        if r_lo == 0 and r_hi == 1:
-            nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-            keep = nb >= 0
-            keep[:, 1:] &= nb[:, 1:] != nb[:, :-1]
-            counts = keep.sum(axis=1)
-            flat = nb[keep]
-            if len(pix) == 0:
-                return pd.Series([], dtype=object)
-            rows = np.split(flat, np.cumsum(counts)[:-1])
-            return pd.Series([r.tolist() for r in rows])
-        out = []
-        for p in pix:
-            hi = _disc_cells(lvl, p, r_hi)
-            if r_lo > 0:
-                hi = np.setdiff1d(hi, _disc_cells(lvl, p, r_lo))
-            out.append(hi.tolist())
-        return pd.Series(out)
-
-    return _udf
+#: finest level of knn_join's right-side density profile (auto_levels):
+#: its counts frame has at most 12*4^8 = 786k rows at any table size
+DENSITY_REF_LEVEL = 8
 
 
 def knn(queries: DataFrame, data: DataFrame, k: int,
@@ -149,8 +101,6 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
     if use_cell:
         dk = data.withColumn("_mc", hpx_cell_key(cell_col, cell_level, lvl))
     else:
-        from ..functions.udfs import hpx_udf
-
         dk = data.withColumn("_mc", hpx_udf(lvl)(F.col(dr), F.col(dd)))
 
     rad = F.radians
@@ -168,10 +118,12 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
         rescans through Python and never enumerates fine cells."""
         key = (F.col("_mc") if at_level == lvl
                else F.shiftright(F.col("_mc"), 2 * (lvl - at_level)))
-        qk = qdf.select(
-            F.col(query_id), "_qra", "_qdec",
-            F.explode(_shell_cells_udf(at_level, r_lo, r_hi)("_qra", "_qdec"))
-            .alias("_pk"))
+        # shells are disjoint across widening rounds, so accumulated
+        # candidate pairs never duplicate
+        shell = neighbors_col(at_level, "_qpix", r_hi, inner=r_lo)
+        qk = explode_cells(
+            qdf.withColumn("_qpix", hpx_udf(at_level)("_qra", "_qdec")),
+            shell, "_pk", [query_id, "_qra", "_qdec"])
         p = (dk.withColumn("_pk", key)
              .join(F.broadcast(qk), "_pk").drop("_pk", "_mc")
              .withColumn("dist_deg", F.degrees(F.acos(
@@ -304,9 +256,9 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     Unlike :func:`knn` (which broadcasts a small query frame), NEITHER
     side is broadcast: both sides are keyed at a probe level and the
     candidate join is a shuffled equi-join on the cell key (plan-asserted
-    in tests) — left explodes into its ring-1 disc via the broadcast
-    (pix -> ring) map (the only broadcast in the plan, 12*4^lvl rows), so
-    every true pair within the verified radius shares a key.
+    in tests) — left explodes into its ring-1 disc (healpix.neighbors_col,
+    JVM Column math), so every true pair within the verified radius
+    shares a key.
 
     Per-pass completeness criterion: a left row is SATISFIED when its
     k-th ranked candidate lies within safe_ring1_rad(level) — then no
@@ -404,16 +356,14 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
 
     When both tables carry an ingest-time nested-HPX cell column
     (``cell_col`` at ``cell_level``), pass keys are shiftrights of it and
-    the whole plan is JVM-only at probe levels <= JVM_RING_MAX_LEVEL
-    (zero ArrowEvalPython, like crossmatch's coarse path).
+    the whole plan is JVM-only at probe levels <= ``cell_level`` (zero
+    ArrowEvalPython, like crossmatch's cell-column path).
 
     Output: one row per (left row, rank): ``left_id``, ``right_id``,
     ``knn_rank`` (1-based, ordered by exact angular distance with
     ``right_id`` as the deterministic tiebreak). If the two id column
     names collide, suffixes ``_l``/``_r`` are appended.
     """
-    from .joins import JVM_RING_MAX_LEVEL, _ring1_map_df, hpx_cell_key
-
     if on_starved not in ("raise", "exact"):
         raise ValueError(f"unknown on_starved {on_starved!r}")
     if auto_levels and levels is not None:
@@ -509,8 +459,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         return (cand.withColumn("_rk", F.row_number().over(w))
                 .filter(F.col("_rk") <= k))
 
-    from ..functions.udfs import hpx_udf
-
     outputs = []
     todo = lf
     vr_table = {L: safe_ring1_rad(L) / RAD_PER_DEG
@@ -518,11 +466,12 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     import time as _time0
     _t_prof0 = _time0.perf_counter()
     if auto_levels:
-        # right-side density at a reference level capped at 8: the counts
-        # frame is bounded by 12*4^8 = 786k rows whatever the table size,
-        # so the broadcast below never depends on data volume
-        ref_top = min(cell_level, JVM_RING_MAX_LEVEL) if use_cell \
-            else JVM_RING_MAX_LEVEL
+        # right-side density at a reference level capped at
+        # DENSITY_REF_LEVEL: the counts frame is bounded by 12*4^8 = 786k
+        # rows whatever the table size, so the broadcast below never
+        # depends on data volume
+        ref_top = (min(cell_level, DENSITY_REF_LEVEL) if use_cell
+                   else DENSITY_REF_LEVEL)
         refs = list(range(ref_top, -1, -2))  # finest ... coarsest
         # MULTI-RESOLUTION density: a single global reference grid
         # cannot serve a skewed sky — too coarse and a dense clump's
@@ -538,8 +487,12 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                 else hpx_udf(ref_top)(F.col("_rra"), F.col("_rdec")))
         lref = (hpx_cell_key("_lcell", cell_level, ref_top) if use_cell
                 else hpx_udf(ref_top)(F.col("_lra"), F.col("_ldec")))
+        # rows with a null cell (null coordinates or ingest cell) can
+        # never match a key; their group is dropped so no null ever
+        # reaches the driver-side drill below
         counts_top = (rk_base.groupBy(rref.alias("_dc"))
                       .agg(F.count(F.lit(1)).alias("_dn"))
+                      .filter(F.col("_dc").isNotNull())
                       .localCheckpoint(eager=True))
 
         def area(R):
@@ -635,7 +588,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
                               F.shiftright("_k", 2 * (even_top - ref_top))
                               == F.col("_hc"), "left_semi")
                         .select("_k"))
-                _keys = keyed.toPandas()["_k"].to_numpy().astype(np.int64)
+                _keys = (keyed.filter(F.col("_k").isNotNull()).toPandas()
+                         ["_k"].to_numpy().astype(np.int64))
                 _hot = np.array([int(r["_dc"]) for r in hot0],
                                 dtype=np.int64)
                 while lvlp + 2 <= even_top:
@@ -894,19 +848,10 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
         # _rcell on the right) would otherwise ride the exploded-left
         # shuffle — the widest exchange of the whole operator — as dead
         # weight.
-        act_xyz = _with_xyz(active, "_l", "_lra", "_ldec")
-        if lvl <= JVM_RING_MAX_LEVEL:
-            ring_map = _ring1_map_df(spark, lvl)
-            lk = (act_xyz.withColumn("_pix", lpix)
-                  .select("_lid", "_lx", "_ly", "_lz", "_pix")
-                  .join(F.broadcast(ring_map), "_pix", "inner")
-                  .withColumn("_mc", F.explode("_ring"))
-                  .drop("_ring", "_pix"))
-        else:
-            disc = _shell_cells_udf(lvl, 0, 1)(F.col("_lra"),
-                                               F.col("_ldec"))
-            lk = (act_xyz.select("_lid", "_lx", "_ly", "_lz",
-                                 F.explode(disc).alias("_mc")))
+        lk = explode_cells(
+            _with_xyz(active, "_l", "_lra", "_ldec")
+            .select("_lid", "_lx", "_ly", "_lz", lpix.alias("_pix")),
+            neighbors_col(lvl, "_pix"), "_mc", ["_lid", "_lx", "_ly", "_lz"])
         rk = rk_base
         if n_active is not None and 0 < n_active <= prune_max_active:
             # small rungs (cascade tails, spot edges): semi-joining the
@@ -919,7 +864,7 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             # was measured SLOWER (A/B at sf1: +2 s/fine rung) — it
             # serializes on the driver what the broadcast thread pool
             # otherwise evaluates concurrently across rungs, and with
-            # the vectorized disc UDF the duplicate evaluation by the
+            # the JVM disc expression the duplicate evaluation by the
             # ancestor prune below is cheap.
             cells = lk.select("_mc").distinct()
             if use_cell and lvl > cell_level:
@@ -1261,12 +1206,3 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     return out.select(F.col("_lid").alias(out_lid),
                       F.col("_rid").alias(out_rid), "knn_rank")
 
-
-def verified_radius_deg(level: int, rings: int = 1) -> float:
-    """Radius within which knn() results are guaranteed complete. Uses the
-    measured SAFE ring-1 radius (healpix.safe_ring1_rad), not max_pix_rad:
-    points at 0.66-1.0x max_pix_rad can land in non-adjacent cells, so the
-    old bound silently over-promised (candidates could be missed without
-    triggering the starved-query widening). Chain argument: any point
-    within rings * safe is reachable through `rings` cell adjacencies."""
-    return rings * safe_ring1_rad(level) / RAD_PER_DEG

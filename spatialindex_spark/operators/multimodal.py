@@ -36,7 +36,6 @@ def _decode_any(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
 
 DECODE_STATS_SCHEMA = "image_id string, psnr double, mean_lum double, phash_check long"
 RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
-FEATURE_SCHEMA = "image_id string, features array<double>"
 
 
 def decode_stats(df: DataFrame) -> DataFrame:
@@ -78,29 +77,6 @@ def resize(df: DataFrame, out_w: int, out_h: int, out_fmt: str = "z") -> DataFra
             yield pd.DataFrame(rows)
 
     return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, RESIZE_SCHEMA)
-
-
-def extract_features(df: DataFrame, grid: int = 4) -> DataFrame:
-    """Cheap visual features: grid x grid mean-luminance patches + global
-    stats -> array<double> embedding column (feeds similarity.py ANN)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, feats = [], []
-            for r in b.itertuples(index=False):
-                img = _decode_any(r.bytes, r.w, r.h, r.fmt)
-                g = imaging.grayscale(img)
-                h, w = g.shape
-                ys = (np.arange(grid + 1) * h) // grid
-                xs = (np.arange(grid + 1) * w) // grid
-                patch = [g[ys[i]:ys[i + 1], xs[j]:xs[j + 1]].mean()
-                         for i in range(grid) for j in range(grid)]
-                patch += [float(g.mean()), float(g.std())]
-                ids.append(r.image_id)
-                feats.append([float(v) for v in patch])
-            yield pd.DataFrame({"image_id": ids, "features": feats})
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "video_id string, frame_idx int, nframes int, bytes binary, w int, h int, fmt string"

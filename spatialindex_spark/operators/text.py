@@ -125,7 +125,16 @@ def with_repetition(df: DataFrame, text_col: str = "text",
       alone.
 
     Same strings, same counts — output identical (sf0.1 oracle green);
-    the sf0.1 gate query dropped 14.0 -> ~1 s."""
+    the sf0.1 gate query dropped 14.0 -> ~1 s.
+
+    Metrics are per ROW: rows that share an ``id_col`` value are scored
+    independently, never pooled. The scratch columns are named
+    ``_rep_*``; an input that already carries such a column is rejected
+    rather than silently overwritten and dropped."""
+    clash = [c for c in df.columns if c.startswith("_rep_")]
+    if clash:
+        raise ValueError(f"with_repetition: input columns {clash} collide "
+                         "with its internal _rep_* scratch columns")
     t = F.col(text_col)
     lines = F.split(t, "\n")
     nl = F.size(lines)

@@ -19,7 +19,7 @@ Trade-off vs the cell strategy, in 100-TB terms:
   strategy wins on heavily clustered sky.
 - the left side replicates into ``ceil(r/h)+1`` zones (default h=r: 2×)
   vs the ring-1 explode's ~4× (interior cells have 8 neighbors + self but
-  the ring map dedups per row); both bounded constants.
+  the ring disc dedups per row); both bounded constants.
 - zones need no covering math at all, so the strategy also serves as an
   independent CORRECTNESS witness for the ring-keyed plan (pairs must be
   set-equal; tested).

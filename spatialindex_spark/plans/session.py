@@ -35,6 +35,15 @@ def get_session(app: str = "spatialindex-spark", cores: int | str = "*",
     On a cluster, replace master with the real one and pass the repo zip via
     ``spark-submit --py-files spatialindex_spark.zip``; everything else is
     identical.
+
+    Caveat for code shipped mid-job: the session throttles the Python
+    workers' per-task ``importlib.invalidate_caches()`` to once per
+    ``SPT_WORKER_IMPORTLIB_THROTTLE`` seconds (default 30; repo-root
+    ``sitecustomize.py``). A module added with ``addPyFile``/``addFile``
+    after a worker has already imported can therefore stay invisible to
+    that worker for up to that interval (ModuleNotFoundError). Ship code
+    before the first job, or set ``SPT_WORKER_IMPORTLIB_THROTTLE=0`` before
+    calling this for the stock per-task behavior.
     """
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores == "*" else max(int(cores) * 2, 8)

@@ -307,12 +307,6 @@ def video_info(data: bytes) -> tuple[int, int, int, str, list[tuple[int, int]]]:
     return nframes, w, h, fmt, spans
 
 
-def decode_video_frame(data: bytes, idx: int) -> np.ndarray:
-    nframes, w, h, fmt, spans = video_info(data)
-    o, ln = spans[idx]
-    return decode(data[o:o + ln], w, h, fmt)
-
-
 def synth_video(i: int, w: int, h: int, nframes: int) -> "list[np.ndarray]":
     """Deterministic clip: the synth image pattern with a per-frame phase
     drift (what a camera pan would look like to the codecs)."""

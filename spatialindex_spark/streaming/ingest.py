@@ -143,17 +143,6 @@ def stream_exact_dedup(stream: DataFrame, text_col: str = "text",
             .drop("_h", "_h2"))
 
 
-def stream_phash_dedup(stream: DataFrame, phash_col: str = "phash",
-                       ts_col: str = "ts",
-                       watermark: str = "10 minutes") -> DataFrame:
-    """Streaming EXACT-phash image dedup (drops byte-different re-encodes
-    whose perceptual hash is identical — the common case for replayed
-    uploads; near-dup radii need the batch phash_image_dedup pass)."""
-    return (stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark([phash_col]))
-
-
 def stream_sessionize(stream: DataFrame, user_col: str = "user_id",
                       ts_col: str = "ts", event_col: str = "event_id",
                       gap_minutes: float = 30.0) -> DataFrame:
@@ -218,39 +207,30 @@ def stream_crossmatch(stream: DataFrame, catalog: DataFrame,
     Plan shape: the catalog side is keyed once by its ingest-time cell
     column (shiftright to the match level — pure JVM, exactly the batch
     crossmatch's cell_col path, joins.py); the STREAM side explodes each
-    row into its ring-1 neighbor cells via the broadcast (pix -> ring)
-    map, so every true pair shares an equi-join key and the stateless
+    row into its ring-1 neighbor cells (healpix.neighbors_col, JVM Column
+    math), so every true pair shares an equi-join key and the stateless
     per-micro-batch join needs no watermark or state store. Exact
     dot-product distance filters after. The static side is the big one at
     scale — it never re-keys per batch (Spark caches the batch plan), and
-    the stream side's per-row cost is one map lookup + <= 9 key rows."""
+    the stream side's per-row cost is a few bit operations + <= 9 key
+    rows."""
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..functions.healpix import explode_cells, neighbors_col
+    from ..operators.joins import hpx_cell_key, ring_cover_level
 
-    # Cap at JVM_RING_MAX_LEVEL like batch crossmatch: _ring1_map_df builds
-    # 12*4^lvl rows on the driver (level 12 ~ 200M rows would OOM), and the
-    # broadcast-map path is only valid when the disc adjacency covers the
-    # radius. Coarser levels keep safe_ring1_rad larger, so the cap never
-    # loses pairs — it only widens the candidate set. Radii beyond even
-    # the order-0 ring-1 bound (~29 deg) drop to level 0 with a
-    # multi-ring disc map (12 pixels, trivially broadcastable) — the same
-    # chain-coverage argument as batch crossmatch's rings>1 path, so no
-    # radius silently under-matches (r3 advice fix).
+    # Radii beyond even the order-0 ring-1 bound (~29 deg) drop to level 0
+    # with a multi-ring disc — the same chain-coverage argument as batch
+    # crossmatch's rings>1 path, so no radius silently under-matches.
     lvl, rings = ring_cover_level(radius_deg, cell_level)
-    ring_map = _ring1_map_df(catalog.sparkSession, lvl, rings)
     cat = (catalog.withColumn("_mc", hpx_cell_key(cell_col, cell_level, lvl))
            .withColumnRenamed(ra_col, "cat_ra")
            .withColumnRenamed(dec_col, "cat_dec")
            .drop(cell_col))   # both sides carry it; avoid ambiguous output
-    s = stream.withColumn("_pix", hpx_cell_key(cell_col, cell_level, lvl))
-    s = (s.join(F.broadcast(ring_map), s["_pix"] == ring_map["_pix"],
-                "inner")
-         .drop(ring_map["_pix"])
-         .withColumn("_mc", F.explode("_ring"))
-         .drop("_ring", "_pix"))
+    s = explode_cells(
+        stream.withColumn("_pix", hpx_cell_key(cell_col, cell_level, lvl)),
+        neighbors_col(lvl, "_pix", rings), "_mc", stream.columns)
     pairs = s.join(cat, "_mc").drop("_mc")
     cosr = math.cos(radius_deg * RAD_PER_DEG)
     rad = F.radians
@@ -282,17 +262,15 @@ def stream_transients(stream: DataFrame, catalog: DataFrame,
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..functions.healpix import explode_cells, neighbors_col
+    from ..operators.joins import hpx_cell_key, ring_cover_level
 
     lvl, rings = ring_cover_level(radius_deg, cell_level)
-    ring_map = _ring1_map_df(catalog.sparkSession, lvl, rings)
-    cat = (catalog
-           .withColumn("_pix", hpx_cell_key(cell_col, cell_level, lvl))
-           .join(F.broadcast(ring_map), "_pix", "inner")
-           .select(F.col(ra_col).alias("_cra"),
-                   F.col(dec_col).alias("_cdec"),
-                   F.explode("_ring").alias("_mc")))
+    cat = explode_cells(
+        catalog.select(F.col(ra_col).alias("_cra"),
+                       F.col(dec_col).alias("_cdec"),
+                       hpx_cell_key(cell_col, cell_level, lvl).alias("_pix")),
+        neighbors_col(lvl, "_pix", rings), "_mc", ["_cra", "_cdec"])
     s = stream.withColumn("_smc", hpx_cell_key(cell_col, cell_level, lvl))
     cosr = math.cos(radius_deg * RAD_PER_DEG)
     rad = F.radians
@@ -315,8 +293,9 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
 
     Plan shape mirrors :func:`stream_crossmatch`: the static target list
     is keyed once at the match level; the STREAM side explodes into its
-    ring-1 (or multi-ring at level 0) neighbor cells via the broadcast
-    map, so the per-micro-batch join is a stateless equi-join — no
+    ring-1 (or multi-ring at level 0) neighbor cells via
+    healpix.neighbors_col, so the per-micro-batch join is a stateless
+    equi-join — no
     watermark or state store. Window math is the batch operator's JVM
     Column trig (operators/cutouts.py); results across micro-batches
     equal the batch ``cutout_windows`` on the same rows (pytest-gated).
@@ -325,13 +304,12 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
     be aggregated at plan time); rows exceeding it raise at runtime via
     an in-plan guard rather than silently under-matching.
     """
+    from ..functions.healpix import explode_cells, neighbors_col
     from ..operators.cutouts import _tan_px_cols, pairing_radius_deg
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..operators.joins import hpx_cell_key, ring_cover_level
 
     radius = pairing_radius_deg(scale_deg_px, max_dim_px)
     lvl, rings = ring_cover_level(radius, cell_level)
-    ring_map = _ring1_map_df(stream_images.sparkSession, lvl, rings)
 
     tgt = (targets.select(target_id, F.col("ra").alias("t_ra"),
                           F.col("dec").alias("t_dec"))
@@ -344,15 +322,10 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
         F.greatest(F.col("w"), F.col("h")) <= F.lit(max_dim_px),
         "stream_cutout: image exceeds declared max_dim_px — "
         "candidate radius bound is unsound; raise max_dim_px")
-    pixkey = F.coalesce(
-        F.when(guard.isNull(), hpx_cell_key(cell_col, cell_level, lvl)),
-        F.lit(-1))
-    s = stream_images.withColumn("_pix", pixkey)
-    s = (s.join(F.broadcast(ring_map), s["_pix"] == ring_map["_pix"],
-                "inner")
-         .drop(ring_map["_pix"])
-         .withColumn("_mc", F.explode("_ring"))
-         .drop("_ring", "_pix"))
+    pixkey = F.when(guard.isNull(), hpx_cell_key(cell_col, cell_level, lvl))
+    s = explode_cells(stream_images.withColumn("_pix", pixkey),
+                      neighbors_col(lvl, "_pix", rings), "_mc",
+                      stream_images.columns)
     pairs = s.join(tgt, "_mc").drop("_mc")
 
     w, h = F.col("w"), F.col("h")

@@ -81,7 +81,7 @@ def test_windows_match_brute_force(spark):
 
 
 def test_windows_cell_column_path_identical(spark):
-    """Supplying the ingest-time cell column (the JVM ring-map path)
+    """Supplying the ingest-time cell column (the all-JVM keying path)
     returns the identical pair set as the UDF-keyed path."""
     from spatialindex_spark.functions.udfs import hpx_udf
 

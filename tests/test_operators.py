@@ -37,6 +37,79 @@ def test_neighbors_complete_vs_dense_sampling():
             assert adj[p] <= got, f"order {order} pix {p}: missing {adj[p]-got}"
 
 
+def _disc_pairs(spark, order: int, pix: np.ndarray, rings: int,
+                inner: int = 0):
+    """(pixel, disc cell) rows of neighbors_col, sorted; duplicate cells
+    within one disc are kept so a failed dedup shows."""
+    import pandas as pd
+
+    from spatialindex_spark.functions.healpix import (explode_cells,
+                                                      neighbors_col)
+
+    # repartition: keep the optimizer from evaluating the disc row by row
+    # on the driver (ConvertToLocalRelation), as it would on local data
+    df = spark.createDataFrame(pd.DataFrame({"p": pix})).repartition(4)
+    got = explode_cells(df, neighbors_col(order, "p", rings, inner), "c",
+                        ["p"])
+    got = got.toPandas().to_numpy()
+    return got[np.lexsort((got[:, 1], got[:, 0]))]
+
+
+def test_neighbors_col_matches_numpy(spark):
+    """The JVM ring expression equals the numpy oracle: ring 1 is
+    neighbors() plus self as a set — every pixel at levels 0-8 and a
+    seeded sample at 12/16/20 — and rings 2-3 at levels 0-4 are the
+    iterated numpy closure (every pixel once the disc could cover the
+    sphere), and their shells (``inner``) are the closure minus the
+    ring-``inner`` closure. Null and out-of-range ids give an empty
+    disc."""
+    from spatialindex_spark.functions.healpix import neighbors_col
+
+    rng = np.random.default_rng(11)
+    for order in list(range(9)) + [12, 16, 20]:
+        npix = 12 << (2 * order)
+        pix = (np.arange(npix, dtype=np.int64) if order <= 8 else
+               np.sort(rng.choice(npix, 5000, replace=False)))
+        disc = np.sort(np.concatenate([pix[:, None], neighbors(order, pix)],
+                                      axis=1), axis=1)
+        first = np.ones(disc.shape, dtype=bool)   # row-wise set semantics
+        first[:, 1:] = disc[:, 1:] != disc[:, :-1]
+        want = np.stack([np.repeat(pix, 9)[first.ravel()], disc[first]], 1)
+        got = _disc_pairs(spark, order, pix, 1)
+        assert np.array_equal(got, want), f"order {order}"
+
+    def closure(order, p, rings):
+        npix = 12 << (2 * order)
+        if (2 * rings + 1) ** 2 >= npix:
+            return np.arange(npix, dtype=np.int64)
+        cells = np.array([p])
+        for _ in range(rings):
+            cells = np.unique(np.concatenate(
+                [cells, neighbors(order, cells).ravel()]))
+        return cells
+
+    for order in range(5):
+        pix = np.arange(12 << (2 * order), dtype=np.int64)
+        # shells (inner > 0): the disc minus the ring-inner disc
+        for rings, inner in ((2, 0), (3, 0), (3, 1), (3, 2)):
+            want = []
+            for p in pix:
+                cells = closure(order, p, rings)
+                if inner:
+                    cells = np.setdiff1d(cells, closure(order, p, inner))
+                want.append(np.stack([np.full(cells.size, p), cells], 1))
+            got = _disc_pairs(spark, order, pix, rings, inner)
+            assert np.array_equal(got, np.concatenate(want)), \
+                (order, rings, inner)
+
+    edge = spark.createDataFrame(
+        [(None,), (-1,), (12 << 14,), (1 << 62,), (-(1 << 40),)], "p long")
+    for rings in (1, 2, 40):
+        assert [r[0] for r in
+                edge.select(neighbors_col(7, "p", rings)).collect()] \
+            == [[]] * 5
+
+
 def test_codecs_roundtrip_and_psnr():
     for i in (0, 5, 9):
         for w in (16, 32, 64):
@@ -509,6 +582,42 @@ def test_knn_join_auto_levels_partial_topk_identical(spark):
 
     full, part = run(False), run(True)
     assert part == full and len(part) == 3 * 520
+
+
+def test_knn_join_auto_levels_null_right_rows(spark):
+    """Right rows with null coordinates and a null ingest cell — enough of
+    them to form the densest "cell" of the density profile — must neither
+    crash the driver-side drill nor appear as anyone's neighbour: the
+    result equals the run without them."""
+    import numpy as np
+
+    from spatialindex_spark.functions.udfs import hpx_udf
+    from spatialindex_spark.operators.knn import knn_join
+
+    rng = np.random.default_rng(29)
+    n_d, n_s, n_null = 300, 60, 240
+    ra = np.concatenate([40.0 + rng.uniform(-0.1, 0.1, n_d),
+                         rng.uniform(0, 60, n_s)])
+    dec = np.concatenate([10.0 + rng.uniform(-0.1, 0.1, n_d),
+                          rng.uniform(-30, 30, n_s)])
+    rows = [(i, float(a), float(d)) for i, (a, d) in enumerate(zip(ra, dec))]
+    pts = spark.createDataFrame(rows, "pid long, ra double, dec double")
+    nulls = spark.createDataFrame(
+        [(10_000 + i, None, None) for i in range(n_null)],
+        "pid long, ra double, dec double")
+    cell = F.when(F.col("ra").isNotNull(), hpx_udf(7)("ra", "dec"))
+    left = pts.withColumn("hpx7", cell).localCheckpoint(eager=True)
+    right = (pts.unionByName(nulls).withColumn("hpx7", cell)
+             .localCheckpoint(eager=True))
+
+    def run(r):
+        return {(x.pid_l, x.knn_rank): x.pid_r for x in
+                knn_join(left, r, k=3, auto_levels=True, left_id="pid",
+                         right_id="pid", cell_col="hpx7", cell_level=7,
+                         on_starved="exact").collect()}
+
+    got = run(right)
+    assert got == run(left) and len(got) == 3 * (n_d + n_s)
 
 
 def test_iceberg_compaction_snapshot(spark, tmp_path):
@@ -1384,6 +1493,26 @@ def test_repetition_metrics(spark):
     assert out[2].top_2gram_frac > 0.4 and out[2].repetition_ok == 0
     assert out[3].repetition_ok == 1
     assert out[4].dup_line_frac == 0.0 and out[4].repetition_ok == 1
+
+
+def test_repetition_rejects_scratch_column_clash(spark):
+    """An input column named like with_repetition's _rep_* scratch columns
+    raises instead of being overwritten and dropped from the output; rows
+    sharing a doc_id are scored per row."""
+    import pytest
+
+    from spatialindex_spark.operators.text import with_repetition
+
+    df = spark.createDataFrame([(1, "a b c", "keep me")],
+                               "doc_id long, text string, _rep_g5 string")
+    with pytest.raises(ValueError, match="_rep_g5"):
+        with_repetition(df)
+    prose = ("the quick brown fox jumps over a lazy dog while twelve "
+             "zebras graze quietly near the old stone bridge at dawn")
+    dup = spark.createDataFrame([(7, "buy now\n" * 20), (7, prose)],
+                                "doc_id long, text string")
+    oks = sorted(r.repetition_ok for r in with_repetition(dup).collect())
+    assert oks == [0, 1]
 
 
 def test_region_join_s2_mode(spark, small_images):

@@ -311,7 +311,7 @@ def test_stream_sessionize_across_batches(spark, tmp_path):
 
 def test_stream_crossmatch_matches_batch(spark, tmp_path):
     """Streaming crossmatch vs a static catalog: the stateless
-    per-micro-batch join (broadcast ring map + cell equi-join + exact
+    per-micro-batch join (JVM ring-disc explode + cell equi-join + exact
     geometry) returns EXACTLY the batch crossmatch pairs for the same
     rows, across two micro-batches."""
     from pyspark.sql import functions as F

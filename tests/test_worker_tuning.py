@@ -61,3 +61,28 @@ def test_session_ships_gate_to_executors():
 
     src = inspect.getsource(S.get_session)
     assert "spark.executorEnv.SPT_WORKER_IMPORTLIB_THROTTLE" in src
+
+
+def test_chains_to_shadowed_sitecustomize(tmp_path):
+    """The repo's sitecustomize must not hide a virtualenv/system one: the
+    next sitecustomize on sys.path still runs — once, even when a second
+    copy of the repo file (another checkout) sits between them on the
+    path, and the second copy does not patch importlib again."""
+    import shutil
+
+    copy = tmp_path / "checkout"
+    copy.mkdir()
+    shutil.copy(os.path.join(REPO, "sitecustomize.py"), copy)
+    user = tmp_path / "user"
+    user.mkdir()
+    (user / "sitecustomize.py").write_text(
+        "import os\n"
+        "os.environ['SPT_TEST_CHAINED'] = "
+        "os.environ.get('SPT_TEST_CHAINED', '') + 'x'\n")
+    script = ("import importlib, os, sitecustomize\n"
+              "print(os.environ.get('SPT_TEST_CHAINED'),\n"
+              "      sitecustomize._orig.__name__)\n")
+    for path in ([user], [copy, user]):
+        env = {"PYTHONPATH": os.pathsep.join(map(str, path)),
+               "SPT_WORKER_IMPORTLIB_THROTTLE": "3600"}
+        assert _run(script, env) == "x invalidate_caches"
